@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Library session factory: the configuration every graft deployment wants —
-  * AQE on (runtime re-planning, skew-join splitting), shuffle partitions
-  * sized to the cluster rather than the 200 default, UTC, and the engine's
-  * custom SQL functions registered. */
+/** The engine's one session factory: the configuration every graft
+  * deployment wants — shuffle partitions sized to the cluster rather than
+  * the 200 default, UTC, and the engine's custom SQL functions registered.
+  * AQE (runtime re-planning, skew-join splitting) is Spark's default. */
 object GraftSession {
   def create(master: String = "local[*]", shufflePartitions: Int = 32,
              appName: String = "graft"): SparkSession = {
@@ -13,7 +13,6 @@ object GraftSession {
       .master(master)
       .appName(appName)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -95,4 +95,14 @@ object Tables {
   def region(s: SparkSession, dir: String): DataFrame     = table(s, dir, "region")
   def documents(s: SparkSession, dir: String): DataFrame  = table(s, dir, "documents")
   def embeddings(s: SparkSession, dir: String): DataFrame = table(s, dir, "embeddings")
+
+  /** Every testdata table by name — the FROM catalog for
+    * [[graft.sql.ZxSql.runCatalog]], so any shipped query string runs
+    * verbatim. */
+  def catalog(s: SparkSession, dir: String): Map[String, DataFrame] = Map(
+    "region" -> region(s, dir), "nation" -> nation(s, dir),
+    "customer" -> customer(s, dir), "supplier" -> supplier(s, dir),
+    "part" -> part(s, dir), "orders" -> orders(s, dir),
+    "lineitem" -> lineitem(s, dir), "events" -> events(s, dir),
+    "documents" -> documents(s, dir), "embeddings" -> embeddings(s, dir))
 }

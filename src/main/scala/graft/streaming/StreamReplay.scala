@@ -59,7 +59,8 @@ object StreamReplay {
     * and sink are per-call lifecycle. A `_STAGED_OK` marker commits the
     * staging: a half-written stage from a crashed run re-stages. */
   /** Staged events-file count — the replays' map-side parallelism (file
-    * stream source = 1 partition/file). r15 TimeN A/B on st_tumbling/
+    * stream source = 1 partition/file). r15 A/B with Bench's methodology
+    * (the timer's source is kept in commit 53f134c) on st_tumbling/
     * st_session/st_gap/st_having at 1/4/8 files (A/B/A, 32 cpus, sf0.1):
     * 1 file 2.2/2.5/3.0/2.0 s; 4 files 2.4/3.0/5.0/4.3; 8 files
     * 3.0/2.8/3.0/2.0 — one file stays the winner (stateful aggs have a

@@ -11,10 +11,14 @@ class PlanSpec extends AnyFunSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
 
-  test("driver contract: every declared query ships a DuckDB oracle") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert(q == o, s"queries without oracle: ${q -- o}; orphan oracles: ${o -- q}")
+  test("registry: row names are unique and s4_ivf_build runs before s4_ivf_knn") {
+    // a duplicate name would silently drop a row from the derived maps
+    val names = SparkEntry.cases.map(_.name)
+    val dups = names.groupBy(identity).collect { case (n, ns) if ns.size > 1 => n }
+    assert(dups.isEmpty, s"duplicate registry rows: $dups")
+    // the probe reads the index the build row materializes
+    assert(names.indexOf("s4_ivf_build") >= 0)
+    assert(names.indexOf("s4_ivf_build") < names.indexOf("s4_ivf_knn"))
   }
 
   test("time-range scan pushes the ns range into the parquet reader") {
