@@ -4530,7 +4530,7 @@ object SparkEntry {
     * oracle checks the materialized artifact, not just the plan. */
   private def s4IvfBuild(s: SparkSession, dir: String): DataFrame = {
     val (path, _) = buildIvfIndex(s, dir)
-    s.read.parquet(path)
+    Tables.parquet(s, Seq(path))
       .groupBy(col("cell").cast(IntegerType).as("cell"))
       .agg(count(lit(1)).as("n"), min(col("vec_id")).as("min_id"),
         max(col("vec_id")).as("max_id"))
@@ -4560,7 +4560,7 @@ object SparkEntry {
     val (path, cents) = ensureIvfIndex(s, dir)
     graft.sql.ZxSql.runCatalog(Map(
       "embeddings" -> Tables.embeddings(s, dir),
-      "emb_index" -> s.read.parquet(path),
+      "emb_index" -> Tables.parquet(s, Seq(path)),
       "emb_index_centroids" -> cents.toDF("cid", "centroid")),
       "select knn using emb_index top 10 query 0 probe 2 from embeddings")
   }
@@ -4579,7 +4579,7 @@ object SparkEntry {
     val (path, cents, books) = ensureIvfPqIndex(s, dir)
     graft.sql.ZxSql.runCatalog(Map(
       "embeddings" -> Tables.embeddings(s, dir),
-      "pq_index" -> s.read.parquet(path),
+      "pq_index" -> Tables.parquet(s, Seq(path)),
       "pq_index_centroids" -> cents.toDF("cid", "centroid"),
       "pq_index_books" -> graft.operators.Similarity.booksToDF(s, books)),
       "select knn using pq_index top 10 query 0 probe 2 shortlist 100 " +
@@ -4597,7 +4597,7 @@ object SparkEntry {
     val (path, cents) = ensureIvfIndex(s, dir)
     graft.sql.ZxSql.runCatalog(Map(
       "embeddings" -> Tables.embeddings(s, dir),
-      "emb_index" -> s.read.parquet(path),
+      "emb_index" -> Tables.parquet(s, Seq(path)),
       "emb_index_centroids" -> cents.toDF("cid", "centroid")),
       "select mmr using emb_index top 8 query 0 shortlist 30 probe 2 from embeddings")
   }

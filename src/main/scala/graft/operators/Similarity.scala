@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
+import graft.sources.Tables
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -153,7 +154,7 @@ object Similarity {
 
   def readCentroids(spark: org.apache.spark.sql.SparkSession,
                     path: String): Seq[(Int, Seq[Double])] =
-    spark.read.parquet(path).select(col("cid"), col("centroid"))
+    Tables.parquet(spark, Seq(path)).select(col("cid"), col("centroid"))
       .collect().toSeq
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toIndexedSeq)
       .sortBy(_._1)
@@ -467,7 +468,7 @@ object Similarity {
                  books: Seq[Seq[(Int, Seq[Double])]], queryVec: Seq[Double],
                  k: Int, nProbe: Int = 2, shortlist: Int = 100,
                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ivfPqProbeFrame(spark.read.parquet(path), cents, books, queryVec, k,
+    ivfPqProbeFrame(Tables.parquet(spark, Seq(path)), cents, books, queryVec, k,
       nProbe, shortlist, idCol, vecCol)
 
   /** [[ivfPqProbe]] over an already-resolved index FRAME — the form the
@@ -596,7 +597,7 @@ object Similarity {
                     k: Int, nProbe: Int = 2, idCol: String = "vec_id",
                     vecCol: String = "embedding",
                     where: Column = lit(true)): DataFrame =
-    ivfProbeFrame(spark.read.parquet(path), cents, queryVec, k, nProbe,
+    ivfProbeFrame(Tables.parquet(spark, Seq(path)), cents, queryVec, k, nProbe,
       idCol, vecCol, where)
 
   /** [[ivfProbeIndex]] over an already-resolved index FRAME — the form the

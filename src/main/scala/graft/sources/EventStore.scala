@@ -164,17 +164,33 @@ object EventStore {
   private def manifestVersionPath(root: org.apache.hadoop.fs.Path, v: Long) =
     new org.apache.hadoop.fs.Path(root, s"_graft_manifest.v$v.json")
 
-  /** All committed manifest versions under the store, ascending. A legacy
-    * unversioned `_graft_manifest.json` reads as version 0. */
+  /** All committed manifest versions under the store, ascending, from ONE
+    * listing of the root. A legacy unversioned `_graft_manifest.json`
+    * reads as version 0. */
   private def manifestVersions(fs: org.apache.hadoop.fs.FileSystem,
                                root: org.apache.hadoop.fs.Path): Seq[Long] = {
-    if (!fs.exists(root)) return Seq.empty // fresh store: no versions yet
-    val versioned = fs.listStatus(root).toSeq.filter(_.isFile)
-      .map(_.getPath.getName)
+    val listing =
+      try fs.listStatus(root).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil } // fresh store: no versions yet
+    val versioned = listing.filter(_.isFile).map(_.getPath.getName)
       .collect { case ManifestVersioned(v) => v.toLong }
-    val legacy = if (fs.exists(new org.apache.hadoop.fs.Path(root, ManifestName)))
-      Seq(0L) else Seq.empty
+    val legacy =
+      if (listing.exists(_.getPath.getName == ManifestName)) Seq(0L) else Seq.empty
     (legacy ++ versioned).distinct.sorted
+  }
+
+  /** The version a read pins — `version`, or the head for a negative one —
+    * with the listing it was resolved from, for the manifest read that
+    * follows to reuse. */
+  private def pinnedVersion(fs: org.apache.hadoop.fs.FileSystem,
+                            root: org.apache.hadoop.fs.Path, version: Long,
+                            op: String, path: String): (Long, Seq[Long]) = {
+    val vs = manifestVersions(fs, root)
+    if (version >= 0) (version, vs)
+    else {
+      require(vs.nonEmpty, s"$op: no manifest under $path")
+      (vs.last, vs)
+    }
   }
 
   private def manifestPath(fs: org.apache.hadoop.fs.FileSystem,
@@ -276,12 +292,15 @@ object EventStore {
     * the id becomes durable in exactly the same atomic rename that makes
     * the files visible, which is what gives [[appendCommitted]] its
     * exactly-once restart contract — there is no window where one is
-    * committed without the other. */
+    * committed without the other. `listed` is a version listing taken
+    * under the same lock hold, reused instead of listing again. */
   private def commitLocked(fs: org.apache.hadoop.fs.FileSystem,
                            root: org.apache.hadoop.fs.Path,
                            files: Seq[String],
-                           txn: Option[(String, Long)] = None): Long = {
-    val next = manifestVersions(fs, root).lastOption.getOrElse(-1L) + 1L
+                           txn: Option[(String, Long)] = None,
+                           listed: Option[Seq[Long]] = None): Long = {
+    val next = listed.getOrElse(manifestVersions(fs, root)).lastOption
+      .getOrElse(-1L) + 1L
     // per-attempt unique tmp name: even a misbehaving double-claimed lock
     // (a broken FS) can then at worst fail a rename loudly, never have two
     // writers interleave bytes into ONE tmp file
@@ -302,10 +321,12 @@ object EventStore {
     next
   }
 
+  /** Manifest `version`'s text (−1 = head). `versions` is the store's
+    * version listing ([[manifestVersions]]): a caller that already holds
+    * one passes it through, so no call lists the root twice. */
   private def readManifestText(fs: org.apache.hadoop.fs.FileSystem,
                                root: org.apache.hadoop.fs.Path,
-                               version: Long): String = {
-    val versions = manifestVersions(fs, root)
+                               version: Long, versions: Seq[Long]): String = {
     require(versions.nonEmpty,
       s"no manifest under $root — this store is not manifested; " +
         "call writeManifest after appends to adopt the pinned-read protocol")
@@ -322,8 +343,13 @@ object EventStore {
 
   private def readManifestFile(fs: org.apache.hadoop.fs.FileSystem,
                                root: org.apache.hadoop.fs.Path,
-                               version: Long = -1L): Seq[String] = {
-    val txt = readManifestText(fs, root, version)
+                               version: Long = -1L): Seq[String] =
+    readManifestFile(fs, root, version, manifestVersions(fs, root))
+
+  private def readManifestFile(fs: org.apache.hadoop.fs.FileSystem,
+                               root: org.apache.hadoop.fs.Path,
+                               version: Long, versions: Seq[Long]): Seq[String] = {
+    val txt = readManifestText(fs, root, version, versions)
     // parse only the files ARRAY — a txn header carries its own quoted
     // strings that must never read as file names
     val fi = txt.indexOf("\"files\"")
@@ -331,6 +357,13 @@ object EventStore {
     """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(body).map(_.group(1)
       .replace("\\\"", "\"").replace("\\\\", "\\")).toSeq.filter(_ != "files")
   }
+
+  /** The head version's files under listing `versions` (empty for a
+    * fresh store). */
+  private def headFiles(fs: org.apache.hadoop.fs.FileSystem,
+                        root: org.apache.hadoop.fs.Path,
+                        versions: Seq[Long]): Seq[String] =
+    versions.lastOption.map(readManifestFile(fs, root, _, versions)).getOrElse(Nil)
 
   private val TxnHeader =
     """"txn": \{"app": "((?:[^"\\]|\\.)*)", "batch": (-?\d+)\}""".r
@@ -343,8 +376,9 @@ object EventStore {
   def lastTxn(spark: SparkSession, path: String, app: String): Option[Long] = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    manifestVersions(fs, root).reverseIterator.map { v =>
-      TxnHeader.findFirstMatchIn(readManifestText(fs, root, v))
+    val versions = manifestVersions(fs, root)
+    versions.reverseIterator.map { v =>
+      TxnHeader.findFirstMatchIn(readManifestText(fs, root, v, versions))
         .filter(m => jsonUnescape(m.group(1)) == app).map(_.group(2).toLong)
     }.collectFirst { case Some(b) => b }
   }
@@ -375,9 +409,9 @@ object EventStore {
     // would burn a retention slot per idle tick — the round-8 lesson);
     // replaying an empty batch is a no-op anyway
     if (moved.nonEmpty) withCommitLock(fs, root) {
-      val current = manifestVersions(fs, root).lastOption
-        .map(v => readManifestFile(fs, root, v)).getOrElse(Seq.empty)
-      commitLocked(fs, root, current ++ moved, Some((app, batchId)))
+      val versions = manifestVersions(fs, root)
+      commitLocked(fs, root, headFiles(fs, root, versions) ++ moved,
+        Some((app, batchId)), Some(versions))
     }
     moved
   }
@@ -510,9 +544,9 @@ object EventStore {
     // an empty statement inserts nothing: no version burned (the
     // appendCommitted rule), the table is simply unchanged
     if (moved.nonEmpty) withCommitLock(fs, root) {
-      val current = manifestVersions(fs, root).lastOption
-        .map(v => readManifestFile(fs, root, v)).getOrElse(Seq.empty)
-      commitLocked(fs, root, current ++ moved)
+      val versions = manifestVersions(fs, root)
+      commitLocked(fs, root, headFiles(fs, root, versions) ++ moved,
+        listed = Some(versions))
     }
     moved
   }
@@ -561,14 +595,14 @@ object EventStore {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     withCommitLock(fs, root) {
-      val current = manifestVersions(fs, root).lastOption
-        .map(v => readManifestFile(fs, root, v).toSet).getOrElse(Set.empty[String])
+      val versions = manifestVersions(fs, root)
+      val current = headFiles(fs, root, versions).toSet
       val files = listDataFiles(fs, root).filter { f =>
         current(f) || !MaintenanceFile.pattern
           .matcher(f.substring(f.indexOf('/') + 1)).matches()
       }
       require(files.nonEmpty, s"writeManifest: no data files under $path")
-      commitLocked(fs, root, files)
+      commitLocked(fs, root, files, listed = Some(versions))
       files.size
     }
   }
@@ -601,17 +635,18 @@ object EventStore {
     * files carrying new columns without rewriting history (absence at the
     * parquet footer is the cheapest possible "null for old rows"), and the
     * merged read unifies every footer's schema — old files' missing
-    * columns surface as nulls. Off by default: the single-footer read
-    * skips the footer sweep and is the right call for a settled schema. */
+    * columns surface as nulls (a Spark job sweeps the footers). Off by
+    * default, the right call for a settled schema: the schema is the
+    * path-first file's footer, read on the driver, so opening the frame
+    * costs one footer read and no job ([[Tables.parquet]]). */
   def readPinned(spark: SparkSession, path: String, version: Long = -1L,
                  mergeSchema: Boolean = false): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = readManifestFile(fs, root, version)
     require(files.nonEmpty, s"readPinned: empty manifest under $path")
-    spark.read.option("basePath", path)
-      .option("mergeSchema", mergeSchema)
-      .parquet(files.map(f => path + "/" + f): _*)
+    Tables.parquet(spark, files.map(f => path + "/" + f),
+      Map("basePath" -> path, "mergeSchema" -> mergeSchema.toString))
   }
 
   /** Manifested compaction — same sizing policy as [[compact]], different
@@ -658,7 +693,7 @@ object EventStore {
           val staged = new org.apache.hadoop.fs.Path(root,
             "." + part + s".compact-staging-$gen")
           fs.delete(staged, true)
-          spark.read.parquet(files.map(_.toString): _*).coalesce(nOut)
+          Tables.parquet(spark, files.map(_.toString)).coalesce(nOut)
             .write.mode(SaveMode.Overwrite).parquet(staged.toString)
           val movedIn = fs.listStatus(staged)
             .filter(f => f.isFile && !f.getPath.getName.startsWith("_")
@@ -685,13 +720,15 @@ object EventStore {
       // manifest, a conflicting maintenance ran — fail loudly, leaving
       // the compacted output as unmanifested garbage for vacuum.
       withCommitLock(fs, root) {
-        val current = readManifestFile(fs, root)
+        val versions = manifestVersions(fs, root)
+        val current = readManifestFile(fs, root, -1L, versions)
         val vanished = replaced -- current.toSet
         require(vanished.isEmpty,
           s"compactInPlace: files replaced by this compaction left the " +
             s"manifest mid-run (concurrent maintenance?): " +
             s"${vanished.take(3).mkString(", ")} — re-run against the new snapshot")
-        commitLocked(fs, root, current.filterNot(replaced) ++ added)
+        commitLocked(fs, root, current.filterNot(replaced) ++ added,
+          listed = Some(versions))
       }
       results.map(_._4).sortBy(_.partition)
     } finally pool.shutdown()
@@ -744,12 +781,8 @@ object EventStore {
       "writeFileStats: no columns")
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = if (version < 0) {
-      val vs = manifestVersions(fs, root)
-      require(vs.nonEmpty, s"writeFileStats: no manifest under $path")
-      vs.last
-    } else version
-    val rel = readManifestFile(fs, root, v)
+    val (v, versions) = pinnedVersion(fs, root, version, "writeFileStats", path)
+    val rel = readManifestFile(fs, root, v, versions)
     val lines = columns.flatMap { c =>
       ZOrder.fileColumnStats(spark, rel.map(f => path + "/" + f), c)
         .zip(rel).collect { case ((_, Some((mn, mx))), r) =>
@@ -806,11 +839,7 @@ object EventStore {
     require(lo <= hi, s"readPinnedWhereString: empty range ['$lo', '$hi']")
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = if (version < 0) {
-      val vs = manifestVersions(fs, root)
-      require(vs.nonEmpty, s"readPinnedWhereString: no manifest under $path")
-      vs.last
-    } else version
+    val (v, versions) = pinnedVersion(fs, root, version, "readPinnedWhereString", path)
     val sp = statsPath(root, v)
     require(fs.exists(sp),
       s"readPinnedWhereString: no stats sidecar for manifest v$v under $path — " +
@@ -823,14 +852,13 @@ object EventStore {
       case StrStatsLine(f, c, mn, mx) if jsonUnescape(c) == column =>
         jsonUnescape(f) -> (jsonUnescape(mn), jsonUnescape(mx))
     }.toMap
-    val files = readManifestFile(fs, root, v)
+    val files = readManifestFile(fs, root, v, versions)
     val kept = files.filter(f => bounds.get(f) match {
       case Some((mn, mx)) => mx >= lo && mn <= hi
       case None           => true // unknown bounds — must admit
     })
     val bind = if (kept.nonEmpty) kept else files.take(1)
-    val df = spark.read.option("basePath", path)
-      .parquet(bind.map(f => path + "/" + f): _*)
+    val df = readFiles(spark, path, bind)
     require(df.schema(column).dataType ==
         org.apache.spark.sql.types.StringType,
       s"readPinnedWhereString: '$column' must be a string column, got " +
@@ -857,11 +885,7 @@ object EventStore {
         s"got [$lo, $hi]")
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = if (version < 0) {
-      val vs = manifestVersions(fs, root)
-      require(vs.nonEmpty, s"readPinnedWhereDouble: no manifest under $path")
-      vs.last
-    } else version
+    val (v, versions) = pinnedVersion(fs, root, version, "readPinnedWhereDouble", path)
     val sp = statsPath(root, v)
     require(fs.exists(sp),
       s"readPinnedWhereDouble: no stats sidecar for manifest v$v under $path — " +
@@ -874,14 +898,13 @@ object EventStore {
       case DblStatsLine(f, c, mn, mx) if jsonUnescape(c) == column =>
         jsonUnescape(f) -> ((mn.toDouble, mx.toDouble))
     }.toMap
-    val files = readManifestFile(fs, root, v)
+    val files = readManifestFile(fs, root, v, versions)
     val kept = files.filter(f => bounds.get(f) match {
       case Some((mn, mx)) => mx >= lo && mn <= hi // primitive IEEE compare
       case None           => true // unknown bounds — must admit
     })
     val bind = if (kept.nonEmpty) kept else files.take(1)
-    val df = spark.read.option("basePath", path)
-      .parquet(bind.map(f => path + "/" + f): _*)
+    val df = readFiles(spark, path, bind)
     require(Set[org.apache.spark.sql.types.DataType](
         org.apache.spark.sql.types.DoubleType, org.apache.spark.sql.types.FloatType)
         .contains(df.schema(column).dataType),
@@ -995,14 +1018,10 @@ object EventStore {
       s"writeFileKeySets: bloomFpp must be in (0,1), got $bloomFpp")
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = if (version < 0) {
-      val vs = manifestVersions(fs, root)
-      require(vs.nonEmpty, s"writeFileKeySets: no manifest under $path")
-      vs.last
-    } else version
-    val rel = readManifestFile(fs, root, v)
+    val (v, versions) = pinnedVersion(fs, root, version, "writeFileKeySets", path)
+    val rel = readManifestFile(fs, root, v, versions)
     val abs = rel.map(f => path + "/" + f)
-    val df = spark.read.option("basePath", path).parquet(abs: _*)
+    val df = readFiles(spark, path, rel)
     // STRING keys (c12c) ride the same two tiers through xxhash64: the
     // sidecar pins 8-byte hashes, never the strings (a doc-id tier would
     // otherwise cost the store's whole key column in sidecar bytes). A
@@ -1134,11 +1153,7 @@ object EventStore {
                       key: Long, version: Long = -1L): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = if (version < 0) {
-      val vs = manifestVersions(fs, root)
-      require(vs.nonEmpty, s"readPinnedPoint: no manifest under $path")
-      vs.last
-    } else version
+    val (v, versions) = pinnedVersion(fs, root, version, "readPinnedPoint", path)
     val kp = keysPath(root, v)
     require(fs.exists(kp),
       s"readPinnedPoint: no key-set sidecar for manifest v$v under $path — " +
@@ -1155,11 +1170,10 @@ object EventStore {
         val bits = java.util.Base64.getDecoder.decode(bm)
         jsonUnescape(f) -> ((k: Long) => bloomContains(bits, bk.toInt, k))
     }.toMap
-    val files = readManifestFile(fs, root, v)
+    val files = readManifestFile(fs, root, v, versions)
     val kept = files.filter(f => keySets.get(f).forall(_.apply(key)))
     val bind = if (kept.nonEmpty) kept else files.take(1)
-    val filtered = spark.read.option("basePath", path)
-      .parquet(bind.map(f => path + "/" + f): _*)
+    val filtered = readFiles(spark, path, bind)
       .filter(col(column) === lit(key))
     if (kept.nonEmpty) filtered else filtered.limit(0)
   }
@@ -1176,11 +1190,7 @@ object EventStore {
     require(key != null, "readPinnedPointString: null key has no membership")
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = if (version < 0) {
-      val vs = manifestVersions(fs, root)
-      require(vs.nonEmpty, s"readPinnedPointString: no manifest under $path")
-      vs.last
-    } else version
+    val (v, versions) = pinnedVersion(fs, root, version, "readPinnedPointString", path)
     val kp = keysPath(root, v)
     require(fs.exists(kp),
       s"readPinnedPointString: no key-set sidecar for manifest v$v under " +
@@ -1202,11 +1212,10 @@ object EventStore {
         val bits = java.util.Base64.getDecoder.decode(bm)
         jsonUnescape(f) -> ((k: Long) => bloomContains(bits, bk.toInt, k))
     }.toMap
-    val files = readManifestFile(fs, root, v)
+    val files = readManifestFile(fs, root, v, versions)
     val kept = files.filter(f => keySets.get(f).forall(_.apply(probe)))
     val bind = if (kept.nonEmpty) kept else files.take(1)
-    val filtered = spark.read.option("basePath", path)
-      .parquet(bind.map(f => path + "/" + f): _*)
+    val filtered = readFiles(spark, path, bind)
       .filter(col(column) === lit(key))
     if (kept.nonEmpty) filtered else filtered.limit(0)
   }
@@ -1223,11 +1232,7 @@ object EventStore {
                       lo: Long, hi: Long, version: Long = -1L): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = if (version < 0) {
-      val vs = manifestVersions(fs, root)
-      require(vs.nonEmpty, s"readPinnedWhere: no manifest under $path")
-      vs.last
-    } else version
+    val (v, versions) = pinnedVersion(fs, root, version, "readPinnedWhere", path)
     val sp = statsPath(root, v)
     require(fs.exists(sp),
       s"readPinnedWhere: no stats sidecar for manifest v$v under $path — " +
@@ -1240,7 +1245,7 @@ object EventStore {
       case StatsLine(f, c, mn, mx) if jsonUnescape(c) == column =>
         jsonUnescape(f) -> (mn.toLong, mx.toLong)
     }.toMap
-    val files = readManifestFile(fs, root, v)
+    val files = readManifestFile(fs, root, v, versions)
     val kept = files.filter(f => ranges.get(f) match {
       case Some((mn, mx)) => mx >= lo && mn <= hi
       case None           => true // unknown range — must admit
@@ -1248,8 +1253,7 @@ object EventStore {
     // every file pruned ⇒ provably empty result; bind one file so the
     // plan still carries the store's schema
     val bind = if (kept.nonEmpty) kept else files.take(1)
-    val df = spark.read.option("basePath", path)
-      .parquet(bind.map(f => path + "/" + f): _*)
+    val df = readFiles(spark, path, bind)
     require(Set[org.apache.spark.sql.types.DataType](
         org.apache.spark.sql.types.ByteType, org.apache.spark.sql.types.ShortType,
         org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.LongType)
@@ -1274,8 +1278,9 @@ object EventStore {
       : (Seq[String], Seq[String]) = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = readManifestFile(fs, root, vOld).toSet
-    val neu = readManifestFile(fs, root, vNew).toSet
+    val versions = manifestVersions(fs, root)
+    val old = readManifestFile(fs, root, vOld, versions).toSet
+    val neu = readManifestFile(fs, root, vNew, versions).toSet
     ((neu -- old).toSeq.sorted, (old -- neu).toSeq.sorted)
   }
 
@@ -1284,8 +1289,7 @@ object EventStore {
     * come from the directory names. */
   def readFiles(spark: SparkSession, path: String, rel: Seq[String]): DataFrame = {
     require(rel.nonEmpty, "readFiles: empty file list")
-    spark.read.option("basePath", path)
-      .parquet(rel.map(f => path + "/" + f): _*)
+    Tables.parquet(spark, rel.map(f => path + "/" + f), Map("basePath" -> path))
   }
 
   /** ROW-level change feed between two manifest versions — the CDC read
@@ -1735,7 +1739,8 @@ object EventStore {
                         root: org.apache.hadoop.fs.Path, op: String,
                         replaced: Set[String], added: Seq[String]): Long =
     withCommitLock(fs, root) {
-      val current = readManifestFile(fs, root)
+      val versions = manifestVersions(fs, root)
+      val current = readManifestFile(fs, root, -1L, versions)
       val vanished = replaced -- current.toSet
       require(vanished.isEmpty,
         s"$op: files this operation replaced left the manifest mid-run " +
@@ -1745,7 +1750,7 @@ object EventStore {
       require(next.nonEmpty,
         s"$op: the commit would empty the store — use reset() to drop " +
           "everything; an empty manifest would break every pinned reader")
-      commitLocked(fs, root, next)
+      commitLocked(fs, root, next, listed = Some(versions))
     }
 
   /** Outcome of [[clusterInPlace]]. */
@@ -1827,8 +1832,10 @@ object EventStore {
     // are simply not clustered yet — the next clusterInPlace picks them
     // up).
     withCommitLock(fs, root) {
-      val current = readManifestFile(fs, root)
-      commitLocked(fs, root, current.filterNot(manifest.toSet) ++ movedIn)
+      val versions = manifestVersions(fs, root)
+      val current = readManifestFile(fs, root, -1L, versions)
+      commitLocked(fs, root, current.filterNot(manifest.toSet) ++ movedIn,
+        listed = Some(versions))
     }
     ClusterStats(manifest.size, movedIn.size, bytes)
   }
@@ -1853,7 +1860,7 @@ object EventStore {
     val versions = manifestVersions(fs, root)
     require(versions.nonEmpty, s"vacuum: no manifest under $path")
     val (dropped, retained) = versions.splitAt(math.max(0, versions.size - keepVersions))
-    val keep = retained.flatMap(v => readManifestFile(fs, root, v)).toSet
+    val keep = retained.flatMap(v => readManifestFile(fs, root, v, versions)).toSet
     val cutoff = System.currentTimeMillis() - olderThanMs
     val deleted = listDataFiles(fs, root).filter { rel =>
       !keep(rel) && {

@@ -1,20 +1,149 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.streaming.runtime.MetadataLogFileIndex
+import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
+import org.apache.spark.sql.graftbridge.isHiddenPathName
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loaders for the driver testdata layout (TESTDATA.md).
   *
-  * Plain `spark.read.parquet` is deliberate: the vectorized Parquet reader +
-  * Catalyst pushdown replace the reference's entire storage layer (per-column
-  * redis processes, proc.rs:12-58) — columnar files on a distributed store
-  * ARE the "separated storage and computing layers" of README.md:4. At
-  * cluster scale the same loaders work against an object-store path; date
-  * partitioning of the events table would add directory-level pruning on top
-  * of the row-group stats we already get.
+  * Every batch parquet open goes through [[Tables.parquet]]: the
+  * vectorized Parquet reader + Catalyst pushdown replace the reference's
+  * entire storage layer (per-column redis processes, proc.rs:12-58) —
+  * columnar files on a distributed store ARE the "separated storage and
+  * computing layers" of README.md:4 — and opening a read costs one driver
+  * footer read and no Spark job. At cluster scale the same loaders work
+  * against an object-store path; date partitioning of the events table
+  * would add directory-level pruning on top of the row-group stats we
+  * already get.
   */
 object Tables {
   def table(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    parquet(s, Seq(s"$dir/$name.parquet"))
+
+  /** `s.read.options(options).parquet(paths: _*)`, opened without a Spark
+    * job. Without a schema, Spark infers one in a one-task job that reads
+    * one footer. This reads that same footer on the driver and hands its
+    * schema to the reader, so opening the frame costs one footer read.
+    *
+    * The footer is Spark's own pick with schema merging off
+    * (`ParquetUtils.inferSchema`): the data file first in path order.
+    * Explicit files are qualified without I/O and only the pick is
+    * stat'ed; a single directory is listed with Spark's hidden-name rule
+    * (or read from its streaming-sink log). The passed schema holds the
+    * data columns only, so partition columns are still discovered from
+    * the directory names.
+    *
+    * Anything this does not reproduce opens the plain way, keeping Spark's
+    * own behaviour and errors: schema merging on (option or session conf),
+    * a parquet summary file, no data file, an option other than
+    * `basePath`/`mergeSchema`, several paths led by a directory, a
+    * directory that is neither flat nor a `k=v` tree, a data column named
+    * like a partition column, or a footer read that throws. */
+  def parquet(s: SparkSession, paths: Seq[String],
+              options: Map[String, String] = Map.empty): DataFrame = {
+    val reader = s.read.options(options)
+    footerSchema(s, paths, options)
+      .fold(reader.parquet(paths: _*))(reader.schema(_).parquet(paths: _*))
+  }
+
+  private def footerSchema(s: SparkSession, paths: Seq[String],
+                           options: Map[String, String]): Option[StructType] =
+    try {
+      val opts = options.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
+      val sql = s.sessionState.conf
+      val merge = opts.get("mergeschema").map(_.toBoolean)
+        .getOrElse(sql.isParquetSchemaMergingEnabled)
+      if (paths.isEmpty || merge || !opts.keySet.subsetOf(Set("basepath", "mergeschema"))
+          || paths.exists(p => isSummary(new Path(p).getName)))
+        None
+      else {
+        val conf = s.sessionState.newHadoopConfWithOptions(options)
+        def qualify(p: String): Path = {
+          val h = new Path(p); h.getFileSystem(conf).makeQualified(h)
+        }
+        val first = paths.map(qualify).minBy(_.toString)
+        val basePath = opts.get("basepath").map(qualify)
+        val fs = first.getFileSystem(conf)
+        val st = fs.getFileStatus(first)
+        // the data file whose footer Spark reads, and the directory its
+        // partition names are relative to (none for bare files)
+        val picked: Option[(FileStatus, Option[Path])] =
+          if (st.isFile) Some(st -> basePath)
+          else if (paths.size > 1) None
+          else {
+            val leaves =
+              if (FileStreamSink.hasMetadata(paths, conf, sql))
+                Some(new MetadataLogFileIndex(s, first, options, None).allFiles())
+              else dataLeaves(fs, first)
+            leaves.filter(ls => ls.nonEmpty && !ls.exists(l => isSummary(l.getPath.getName)))
+              .map(ls => ls.minBy(_.getPath.toString) -> Some(basePath.getOrElse(first)))
+          }
+        for {
+          (file, base) <- picked
+          partCols <- base.fold(Option(Seq.empty[String]))(partitionNames(_, file.getPath))
+          schema = readFooterSchema(sql, conf, file)
+          // a data column named like a partition column takes Spark's
+          // overlap rules, which a passed schema would change
+          if !schema.fieldNames.exists(n => partCols.exists(_.equalsIgnoreCase(n)))
+        } yield schema
+      }
+    } catch { case NonFatal(_) => None }
+
+  /** One footer's schema, converted the way Spark's inference does it
+    * (`ParquetFileFormat.mergeSchemasInParallel`: these five confs,
+    * converter defaults otherwise). */
+  private def readFooterSchema(sql: SQLConf, conf: Configuration,
+                               file: FileStatus): StructType = {
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf), SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = sql.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = sql.parquetInferTimestampNTZEnabled,
+        nanosAsLong = sql.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation = sql.parquetReaderRespectUnknownTypeAnnotation))
+  }
+
+  private def isSummary(name: String): Boolean =
+    name == "_metadata" || name == "_common_metadata"
+
+  /** Partition column names on the way from `base` down to `file`, or None
+    * when `file` does not sit under `base`. */
+  private def partitionNames(base: Path, file: Path): Option[Seq[String]] = {
+    val (b, dir) = (base.toString, file.getParent.toString)
+    if (dir == b) Some(Nil)
+    else if (dir.startsWith(b + "/"))
+      Some(dir.substring(b.length + 1).split('/').toSeq
+        .filter(_.contains("=")).map(_.takeWhile(_ != '=')))
+    else None
+  }
+
+  /** The files Spark's file index reads from one directory: a flat
+    * directory's files, or every file of a `k=v` partition tree. None for
+    * other shapes (files beside subdirectories, a non-partition
+    * subdirectory), which Spark resolves by rules not reproduced here. */
+  private def dataLeaves(fs: FileSystem, dir: Path): Option[Seq[FileStatus]] = {
+    val (dirs, files) = fs.listStatus(dir).toSeq
+      .filterNot(st => isHiddenPathName(st.getPath.getName)).partition(_.isDirectory)
+    if (dirs.isEmpty) Some(files)
+    else if (files.nonEmpty || !dirs.forall(_.getPath.getName.contains("="))) None
+    else dirs.foldLeft(Option(Seq.empty[FileStatus])) { (acc, d) =>
+      for (a <- acc; l <- dataLeaves(fs, d.getPath)) yield a ++ l
+    }
+  }
 
   /** Scale-ADAPTIVE fan-out for CPU-heavy narrow work (opt guide §2: derive
     * partitioning from the input, never from a constant tuned for one box).

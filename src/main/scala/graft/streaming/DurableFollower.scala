@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.EventStore
+import graft.sources.{EventStore, Tables}
 
 /** [[ChangeFeedFollower]] with a DURABLE fold: the maintained aggregate
   * and the version it has folded through commit ATOMICALLY, together, so
@@ -55,7 +55,7 @@ final class DurableAggregateFollower(
     val committed = committedVersions(spark, stateDir)
     if (committed.nonEmpty) {
       val v = committed.max
-      stateDf = spark.read.parquet(statePath(root, v).toString)
+      stateDf = Tables.parquet(spark, Seq(statePath(root, v).toString))
       v
     } else {
       val v = EventStore.manifestVersion(spark, path)
@@ -87,7 +87,7 @@ final class DurableAggregateFollower(
     if (fs.exists(dest)) fs.delete(dest, true)
     require(fs.rename(staging, dest),
       s"DurableAggregateFollower: could not commit state v$v under $stateDir")
-    stateDf = spark.read.parquet(dest.toString)
+    stateDf = Tables.parquet(spark, Seq(dest.toString))
     committedVersions(spark, stateDir).sorted.dropRight(keepStates)
       .foreach(old => fs.delete(statePath(root, old), true))
   }

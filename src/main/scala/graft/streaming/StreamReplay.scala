@@ -196,7 +196,7 @@ object StreamReplay {
       try { query.processAllAvailable(); recordProgress(name, query) }
       finally query.stop()
     }
-    s.read.parquet(stage + "/out")
+    graft.sources.Tables.parquet(s, Seq(stage + "/out"))
   }
 
   /** Stage `events` (cached per dir — data + sentinel), run
@@ -220,6 +220,6 @@ object StreamReplay {
       try { query.processAllAvailable(); recordProgress(name, query) }
       finally query.stop()
     }
-    s.read.parquet(stage + "/out")
+    graft.sources.Tables.parquet(s, Seq(stage + "/out"))
   }
 }

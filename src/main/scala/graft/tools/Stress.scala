@@ -294,7 +294,7 @@ object Stress {
     }
     // string vs hash span key at 10×: the x15b claim is SHUFFLE BYTES, so
     // measure them — a listener sums shuffle writes across the job's
-    // stages (async bus: allow a drain margin before reading)
+    // stages (async bus: drained before reading)
     def withShuffleBytes(name: String)(f: => Long): Unit = {
       val acc = new java.util.concurrent.atomic.AtomicLong(0L)
       val listener = new org.apache.spark.scheduler.SparkListener {
@@ -306,7 +306,7 @@ object Stress {
       val t0 = System.nanoTime()
       val rows = try f finally ()
       val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(2000) // listener bus drain
+      org.apache.spark.sql.graftbridge.drainListenerBus(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
       println(f"[stress] $name rows=$rows time=$dt%.2f s " +
         f"shuffle_bytes=${acc.get()} (${acc.get() / 1048576.0}%.1f MiB)")

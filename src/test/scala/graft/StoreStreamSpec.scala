@@ -2056,15 +2056,13 @@ class StoreStreamSpec extends AnyFunSuite {
     try {
       val n = EventStore.cloneSnapshot(spark, srcDir, dstDir)
       assert(n == nFiles)
-      // listener bus is async — poll until the copy's task events land.
+      // listener bus is async — drain it so every task event has landed.
       // tasks = job PARTITIONS (min(files, defaultParallelism)), each
       // copying a slice of the 48 files; >= 2 witnesses a distributed job
       // (a driver loop runs zero tasks), and cloneSnapshot's internal
       // accumulator already cross-checked all copies ran task-side
       val want = math.min(nFiles, spark.sparkContext.defaultParallelism)
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (tasks.get() < want && System.nanoTime() < deadline)
-        Thread.sleep(20)
+      org.apache.spark.sql.graftbridge.drainListenerBus(spark.sparkContext)
       assert(tasks.get() >= math.max(2, want),
         s"expected >= ${math.max(2, want)} copy tasks, saw ${tasks.get()} — " +
           "the copy ran on the driver")
